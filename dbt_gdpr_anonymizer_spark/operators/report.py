@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
-from dbt_gdpr_anonymizer_spark.policy import PolicyError, TablePolicy
+from dbt_gdpr_anonymizer_spark.policy import PolicyError, TablePolicy, _sql_str
 
 REPORT_SCHEMA = T.StructType(
     [
@@ -46,6 +46,11 @@ def pii_inventory(
 
     ``strict`` reproduces the compile-gate (D1): a PII column without an
     anonymization method raises instead of reporting.
+
+    The rows are policy-sized, so they are sorted here and handed to
+    Spark as one SQL ``VALUES`` relation: a local relation that
+    ``collect()`` answers without a Spark job (``createDataFrame`` over a
+    Python list plus a Spark sort cost 3 jobs and a Python worker start).
     """
     conf = conf or settings()
     rows = []
@@ -71,12 +76,29 @@ def pii_inventory(
                     else conf.k_anonymity_min,
                 )
             )
-    df = spark.createDataFrame(rows, REPORT_SCHEMA).orderBy(
-        "model_name", "column_name"
-    )
+    if rows:
+        rows.sort(key=lambda r: (r[0], r[1]))
+        typed = ", ".join(
+            f"cast(col{i} as {f.dataType.simpleString()}) AS {f.name}"
+            for i, f in enumerate(REPORT_SCHEMA.fields, 1)
+        )
+        values = ", ".join(
+            "(" + ", ".join(_sql_value(v) for v in r) + ")" for r in rows
+        )
+        df = spark.sql(f"SELECT {typed} FROM VALUES {values}")
+    else:
+        df = spark.createDataFrame([], REPORT_SCHEMA)
     if with_timestamp:
         df = df.select("*", F.current_timestamp().alias("report_generated_at"))
     return df
+
+
+def _sql_value(v: str | int | None) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return _sql_str(v)
+    return str(int(v))
 
 
 def summarize_inventory(inventory: DataFrame) -> dict:

@@ -4,19 +4,25 @@ driver-side checks.
 Reference: src/dbt_gdpr_anonymizer/scripts/validate_anonymization.py and
 tests/assert_no_pii_in_marts.sql. The reference samples ≤100 distinct values
 per column into the driver and regex-matches in Python; here every scan is a
-DataFrame filter (``rlike``), so matching runs on executors and the driver
+DataFrame filter (``RLIKE``), so matching runs on executors and the driver
 only sees counts/samples — the design that survives a 100 TB mart.
 
 Java regex (unlike DuckDB's RE2) supports the reference's negative
 lookaheads, so the patterns are reproduced verbatim.
 
+Every check is SQL text, written once below and shared by the fused
+``validate()`` counts and the row-level red-path outputs
+(``assert_no_pii_in_mart``, ``scan_for_pii``,
+``check_anonymization_quality``). An aggregate is then one parsed
+projection, not a py4j round trip per ``F.*`` call (about 11 per count),
+and the regexes enter the SQL through ``policy._sql_str``, so they read
+the same under either ``escapedStringLiterals`` setting.
+
 Scale notes:
-  * ``validate()`` fuses every per-table check into one aggregation pass per
-    table (mart: 1 job; enriched: quality aggregates + the k-anonymity
-    shuffle) instead of re-running the full lineage per metric.
+  * ``validate()`` runs five Spark jobs at any size: one fused
+    aggregation over the mart, one grouped pass over ``enriched``.
   * ``scan_for_pii`` is a single scan: each row is exploded into its
-    (column × pattern) cells once, then filtered — not a union of N×P
-    subplans each re-reading the table.
+    string cells once, and each cell is tested against every pattern.
   * GPS precision uses a decimal round-trip, not ``x*100 == floor(x*100)``:
     the float product of a correctly-rounded double (e.g. 4.35*100 =
     434.99999999999994) fails the floor test, producing false violations.
@@ -26,9 +32,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from dbt_gdpr_anonymizer_spark.policy import _sql_ident, _sql_str
 
 # validate_anonymization.py:23-35 — PII detection patterns (verbatim).
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@(?!anonymized\.gouv\.fr)[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -42,34 +51,61 @@ PII_PATTERNS = {
 }
 
 
-def too_precise(col: Column, precision: int = 2) -> Column:
-    """True when a coordinate carries more than ``precision`` decimals.
+def _too_precise(c: str) -> str:
+    """SQL: true when coordinate ``c`` carries more than two decimals.
 
     Decimal round-trip comparison: exact for any double that IS the rounded
     value, immune to the ``x*100 != floor(x*100)`` float fragility (the
     reference's string ``split_part`` check has the same intent).
     """
-    return col != col.cast(f"decimal(18,{precision})").cast("double")
+    return f"{c} != cast(cast({c} as decimal(18,2)) as double)"
 
 
-def _mart_violation_conditions(mart: DataFrame) -> dict[str, Column]:
-    """The three singular-test conditions (assert_no_pii_in_marts.sql:18-58)."""
-    lat, lon = F.col("latitude"), F.col("longitude")
-    return {
-        "email": (
-            F.col("contact_email").isNotNull()
-            & ~F.col("contact_email").like("%@anonymized.gouv.fr")
-        ),
-        "phone": (
-            F.col("contact_phone").isNotNull()
-            & ~F.col("contact_phone").like("%XX%")
-        ),
-        "gps": (
-            lat.isNotNull()
-            & lon.isNotNull()
-            & (too_precise(lat) | too_precise(lon))
-        ),
-    }
+def _pii_hit(value_sql: str, pattern: str) -> str:
+    """SQL: true when ``value_sql`` matches the PII regex ``pattern``."""
+    return f"{value_sql} RLIKE {_sql_str(pattern)}"
+
+
+# assert_no_pii_in_marts.sql:18-58 — the three singular tests:
+# (name, violation condition, reported column, reported value, issue).
+_MART_CHECKS = (
+    (
+        "email",
+        "contact_email IS NOT NULL"
+        " AND NOT contact_email LIKE '%@anonymized.gouv.fr'",
+        "contact_email",
+        "contact_email",
+        "Non-anonymized email detected",
+    ),
+    (
+        "phone",
+        "contact_phone IS NOT NULL AND NOT contact_phone LIKE '%XX%'",
+        "contact_phone",
+        "contact_phone",
+        "Non-masked phone number detected",
+    ),
+    (
+        "gps",
+        "latitude IS NOT NULL AND longitude IS NOT NULL AND ("
+        f"{_too_precise('latitude')} OR {_too_precise('longitude')})",
+        "latitude/longitude",
+        "concat_ws(', ', cast(latitude as string), cast(longitude as string))",
+        "GPS coordinates too precise",
+    ),
+)
+
+# validate_anonymization.py:154-211 — the quality metrics' row conditions.
+# ``bad`` counts are derived as total - ok so the two can never disagree.
+_QUALITY_CONDITIONS = {
+    "email_total": "contact_email_anon IS NOT NULL",
+    "email_ok": "contact_email_anon LIKE '%@anonymized.gouv.fr'",
+    "phone_total": "contact_phone_anon IS NOT NULL",
+    "phone_ok": "contact_phone_anon LIKE '%XX XX XX XX'",
+    "coord_total": "latitude_anon IS NOT NULL AND longitude_anon IS NOT NULL",
+    "coord_ok": "latitude_anon IS NOT NULL AND longitude_anon IS NOT NULL"
+    f" AND NOT ({_too_precise('latitude_anon')})"
+    f" AND NOT ({_too_precise('longitude_anon')})",
+}
 
 
 def assert_no_pii_in_mart(mart: DataFrame) -> DataFrame:
@@ -79,28 +115,16 @@ def assert_no_pii_in_mart(mart: DataFrame) -> DataFrame:
     unmasked phones, and >2-decimal GPS coordinates, UNION ALL'd with the
     reference's 4-column shape.
     """
-    cond = _mart_violation_conditions(mart)
-    email = mart.filter(cond["email"]).select(
-        F.lit("mart_services_open_data").alias("table_name"),
-        F.lit("contact_email").alias("column_name"),
-        F.col("contact_email").alias("value"),
-        F.lit("Non-anonymized email detected").alias("issue_type"),
-    )
-    phone = mart.filter(cond["phone"]).select(
-        F.lit("mart_services_open_data").alias("table_name"),
-        F.lit("contact_phone").alias("column_name"),
-        F.col("contact_phone").alias("value"),
-        F.lit("Non-masked phone number detected").alias("issue_type"),
-    )
-    gps = mart.filter(cond["gps"]).select(
-        F.lit("mart_services_open_data").alias("table_name"),
-        F.lit("latitude/longitude").alias("column_name"),
-        F.concat_ws(
-            ", ", F.col("latitude").cast("string"), F.col("longitude").cast("string")
-        ).alias("value"),
-        F.lit("GPS coordinates too precise").alias("issue_type"),
-    )
-    return email.unionByName(phone).unionByName(gps)
+    parts = [
+        mart.where(cond).selectExpr(
+            "'mart_services_open_data' AS table_name",
+            f"{_sql_str(column)} AS column_name",
+            f"{value} AS value",
+            f"{_sql_str(issue)} AS issue_type",
+        )
+        for _, cond, column, value, issue in _MART_CHECKS
+    ]
+    return reduce(DataFrame.unionByName, parts)
 
 
 def scan_for_pii(
@@ -111,11 +135,11 @@ def scan_for_pii(
 ) -> DataFrame:
     """Regex PII scan over every string column — ONE scan of the table.
 
-    Each row is exploded into its (column, value) string cells, cross-
-    producted with the (issue, pattern) list via a second explode, then
-    filtered with ``regexp_like(value, pattern)``. The table is read once;
-    the reference reads it once per column (validate_anonymization.py:96-134)
-    and the previous design here unioned N×P limited subplans.
+    Each row is exploded into its (column, value) string cells, and each
+    non-NULL cell into the issues whose pattern it matches. The table is
+    read once; the reference reads it once per column
+    (validate_anonymization.py:96-134). Every pattern is a literal in the
+    plan, so each regex compiles once per task.
 
     ``sample_per_column`` caps output rows per (column, issue) via a window
     over the (tiny) post-filter match set.
@@ -126,33 +150,26 @@ def scan_for_pii(
     if not string_cols:
         raise ValueError("no string columns to scan")
 
-    cells = F.array(
-        *[
-            F.struct(F.lit(c).alias("column_name"), F.col(c).alias("value"))
-            for c in string_cols
-        ]
+    cells = ", ".join(
+        f"named_struct('column_name', {_sql_str(c)}, 'value', {_sql_ident(c)})"
+        for c in string_cols
     )
-    pats = F.array(
-        *[
-            F.struct(F.lit(issue).alias("issue_type"), F.lit(pat).alias("pattern"))
-            for issue, pat in patterns.items()
-        ]
+    issues = ", ".join(
+        f"CASE WHEN {_pii_hit('value', pat)} THEN {_sql_str(issue)} END"
+        for issue, pat in patterns.items()
     )
-    from pyspark.sql import Window as W
-
     matches = (
-        df.select(F.explode(cells).alias("cell"))
-        .filter(F.col("cell.value").isNotNull())
-        .select("cell.column_name", "cell.value", F.explode(pats).alias("p"))
-        .filter(F.expr("regexp_like(value, p.pattern)"))
-        .select(
-            F.lit(table_name).alias("table_name"),
+        df.selectExpr(f"inline(array({cells}))")
+        .where("value IS NOT NULL")
+        .selectExpr(
+            f"{_sql_str(table_name)} AS table_name",
             "column_name",
             "value",
-            F.col("p.issue_type").alias("issue_type"),
+            f"explode(array({issues})) AS issue_type",
         )
+        .where("issue_type IS NOT NULL")
     )
-    w = W.partitionBy("column_name", "issue_type").orderBy("value")
+    w = Window.partitionBy("column_name", "issue_type").orderBy("value")
     return (
         matches.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= sample_per_column)
@@ -165,40 +182,6 @@ class QualityMetrics:
     emails: dict
     phones: dict
     coordinates: dict
-
-
-def _quality_aggs() -> list[Column]:
-    """The nine conditional aggregates (validate_anonymization.py:154-211),
-    computable in one pass. ``bad`` counts are derived as total - ok so the
-    two can never disagree."""
-    e, p = F.col("contact_email_anon"), F.col("contact_phone_anon")
-    la, lo = F.col("latitude_anon"), F.col("longitude_anon")
-    # F.sum over zero rows is NULL — coalesce to 0 so an empty table
-    # produces 0-count metrics rather than None arithmetic.
-    return [
-        F.count(F.when(e.isNotNull(), 1)).alias("email_total"),
-        F.coalesce(
-            F.sum(F.when(e.like("%@anonymized.gouv.fr"), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("email_ok"),
-        F.count(F.when(p.isNotNull(), 1)).alias("phone_total"),
-        F.coalesce(
-            F.sum(F.when(p.like("%XX XX XX XX"), 1).otherwise(0)), F.lit(0)
-        ).alias("phone_ok"),
-        F.count(F.when(la.isNotNull() & lo.isNotNull(), 1)).alias("coord_total"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    la.isNotNull()
-                    & lo.isNotNull()
-                    & ~too_precise(la)
-                    & ~too_precise(lo),
-                    1,
-                ).otherwise(0)
-            ),
-            F.lit(0),
-        ).alias("coord_ok"),
-    ]
 
 
 def _metrics_from_row(row) -> QualityMetrics:
@@ -229,7 +212,10 @@ def _metrics_from_row(row) -> QualityMetrics:
 def check_anonymization_quality(enriched: DataFrame) -> QualityMetrics:
     """Conditional-aggregate quality metrics in one pass (the reference runs
     three separate queries)."""
-    return _metrics_from_row(enriched.agg(*_quality_aggs()).collect()[0])
+    row = enriched.selectExpr(
+        *[f"count_if({c}) AS {n}" for n, c in _QUALITY_CONDITIONS.items()]
+    ).collect()[0]
+    return _metrics_from_row(row)
 
 
 def k_anonymity_violations(
@@ -254,51 +240,49 @@ def validate(
 ) -> dict:
     """Full validation run (validate_anonymization.py:311-374).
 
-    Exactly three Spark jobs regardless of table size:
-      1. one fused aggregation over ``mart`` — the three singular-test
-         violation counts AND every (string column × pattern) regex-scan hit
-         count in a single pass;
-      2. one fused aggregation over ``enriched`` — the nine quality metrics;
-      3. the k-anonymity group-by over ``enriched``.
+    Exactly five Spark jobs under AQE, regardless of table size:
+      1-2. one fused aggregation over ``mart`` (shuffle stage + result) —
+           the three singular-test violation counts AND every (string
+           column × pattern) regex-scan hit count in a single pass;
+      3-5. one grouped pass over ``enriched`` (group-by stage, roll-up
+           stage, result): a group-by on the quasi-identifiers carrying
+           the quality metrics' partial counts, then a roll-up that sums
+           them and counts the groups with fewer than ``k`` rows.
 
-    (The previous design ran four actions that each recomputed the full
-    raw→mart lineage.) Returns a report dict; callers wanting the violating
-    ROWS use ``assert_no_pii_in_mart`` / ``scan_for_pii`` directly, and
+    Returns a report dict; callers wanting the violating ROWS use
+    ``assert_no_pii_in_mart`` / ``scan_for_pii`` directly, and
     ``run_validation_gate`` persists them + sets the exit code.
     """
-    cond = _mart_violation_conditions(mart)
     string_cols = [
         f.name for f in mart.schema.fields if f.dataType.simpleString() == "string"
     ]
-    # F.sum over ZERO rows is NULL, not 0 — coalesce so an empty mart
-    # yields clean zero counts instead of None arithmetic errors.
-    aggs = [
-        F.coalesce(F.sum(F.when(c, 1).otherwise(0)), F.lit(0)).alias(
-            f"viol_{name}"
-        )
-        for name, c in cond.items()
-    ]
+    # count_if is a count: 0, never NULL, over an empty mart.
+    aggs = [f"count_if({cond}) AS viol_{name}" for name, cond, *_ in _MART_CHECKS]
     for col in string_cols:
         for issue, pat in PII_PATTERNS.items():
             aggs.append(
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col(col).isNotNull() & F.col(col).rlike(pat), 1
-                        ).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias(f"scan__{col}__{issue}")
+                f"count_if({_pii_hit(_sql_ident(col), pat)})"
+                f" AS {_sql_ident(f'scan__{col}__{issue}')}"
             )
-    mrow = mart.agg(*aggs).collect()[0]
+    mrow = mart.selectExpr(*aggs).collect()[0]
     n_pii = mrow["viol_email"] + mrow["viol_phone"] + mrow["viol_gps"]
     scan_hits = {
         k_: v for k_, v in mrow.asDict().items() if k_.startswith("scan__") and v
     }
     n_scan = sum(scan_hits.values())
 
-    metrics = check_anonymization_quality(enriched)
-    n_kviol = k_anonymity_violations(enriched, list(quasi_identifiers), k).count()
+    groups = enriched.groupBy(*quasi_identifiers).agg(
+        *[F.expr(f"count_if({c}) AS {n}") for n, c in _QUALITY_CONDITIONS.items()],
+        F.expr("count(1) AS group_size"),
+    )
+    # sum over zero groups is NULL — coalesce so an empty table yields
+    # zero counts rather than None arithmetic.
+    erow = groups.selectExpr(
+        *[f"coalesce(sum({n}), 0) AS {n}" for n in _QUALITY_CONDITIONS],
+        f"count_if(group_size < {int(k)}) AS k_violations",
+    ).collect()[0]
+    metrics = _metrics_from_row(erow)
+    n_kviol = erow["k_violations"]
     return {
         "pii_violations": int(n_pii),
         "pii_scan_hits": int(n_scan),
@@ -329,7 +313,7 @@ def run_validation_gate(
     ``failures_root`` set, violating rows (singular-test + k-anonymity
     groups) are written as parquet under ``{failures_root}/<check>``; rows
     are only computed when the fused ``validate()`` counts say they exist,
-    so the green path stays at three jobs.
+    so the green path is ``validate()``'s five jobs and nothing more.
     """
     report = validate(enriched, mart, quasi_identifiers, k)
     if failures_root:

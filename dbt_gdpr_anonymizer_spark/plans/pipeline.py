@@ -26,8 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
-from dbt_gdpr_anonymizer_spark.functions import masking
-from dbt_gdpr_anonymizer_spark.policy import SERVICES_POLICY, TablePolicy, mask_model
+from dbt_gdpr_anonymizer_spark.policy import (
+    SERVICES_POLICY,
+    TablePolicy,
+    _sql_ident,
+    _sql_str,
+    mask_model,
+)
 
 RAW_COLUMNS = [
     "service_id",
@@ -87,37 +92,36 @@ REGION_MAP = {
 }
 
 
-def _mapping_expr(col, mapping: dict[str, str], default: str):
-    """CASE chain from a mapping dict (kept as expressions: tiny cardinality,
-    avoids even a broadcast for the common enrich path).
+def _mapping_expr(col: str, mapping: dict[str, str], default: str) -> str:
+    """CASE chain from a mapping dict, as SQL text for a layer's
+    ``selectExpr`` (kept as an expression: tiny cardinality, avoids even
+    a broadcast for the common enrich path). NULL input falls to ELSE.
 
-    Built as ONE parsed SQL string, not chained ``F.when()`` calls: each
-    ``when`` is a py4j round trip, and the three pipeline maps total ~50
-    entries — ~0.2 s of socket chatter per query build, measured. The
-    parsed CASE is semantically identical (NULL input falls to ELSE in
-    both forms). ``col`` is a plain column name string.
-
-    Escaping: Spark SQL string literals process BACKSLASH escapes by
-    default (``'C:\\temp'`` parses as ``C:<TAB>emp``), so backslashes
-    double before quotes do; backticks in the column name double too —
-    otherwise a key/value/name containing either silently changes
-    meaning vs the old ``F.lit`` chain, which compared raw bytes."""
+    Keys, values and the default go through ``policy._sql_str``, so a
+    backslash or quote compares as raw bytes under either
+    ``escapedStringLiterals`` setting; backticks in ``col`` double."""
     if not mapping:
-        return F.lit(default)
-
-    def q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    col_sql = "`" + col.replace("`", "``") + "`"
+        return _sql_str(default)
+    col_sql = _sql_ident(col)
     arms = " ".join(
-        f"WHEN {col_sql} = {q(k)} THEN {q(v)}" for k, v in mapping.items()
+        f"WHEN {col_sql} = {_sql_str(k)} THEN {_sql_str(v)}"
+        for k, v in mapping.items()
     )
-    return F.expr(f"CASE {arms} ELSE {q(default)} END")
+    return f"CASE {arms} ELSE {_sql_str(default)} END"
+
+
+# Each layer is ONE parsed projection (``selectExpr``): every chained F.*
+# call is a py4j round trip, and hundreds of them per layer are a fixed
+# cost that dominates small deltas. Two expressions must stay the SQL
+# twins of their Column builders: the staging md5 over the null sentinel
+# is masking.surrogate_key, the enrich geohash is masking.create_geohash.
 
 
 def staging(raw: DataFrame) -> DataFrame:
     """Clean + type the raw seed (stg_services_publics.sql:39-95)."""
-    df = raw.select(
+    return raw.selectExpr(
+        "md5(coalesce(cast(service_id as string),"
+        " '_dbt_utils_surrogate_key_null_')) AS service_key",
         "service_id",
         "service_name",
         "parent_organization",
@@ -129,27 +133,18 @@ def staging(raw: DataFrame) -> DataFrame:
         "postal_code",
         "city",
         "commune",
-        F.col("latitude").cast("double").alias("latitude"),
-        F.col("longitude").cast("double").alias("longitude"),
+        "cast(latitude as double) AS latitude",
+        "cast(longitude as double) AS longitude",
         "insee_code",
-        F.col("last_updated").cast("date").alias("last_updated"),
-        F.current_timestamp().alias("loaded_at"),
-    ).filter(F.col("service_id").isNotNull() & F.col("service_name").isNotNull())
-    flagged = df.select(
-        masking.surrogate_key("service_id").alias("service_key"),
-        "*",
-        F.when(F.col("contact_email").isNotNull(), 1).otherwise(0).alias("has_email"),
-        F.when(F.col("contact_phone").isNotNull(), 1).otherwise(0).alias("has_phone"),
-        F.when(F.col("street_address").isNotNull(), 1)
-        .otherwise(0)
-        .alias("has_address"),
-        F.when(
-            F.col("latitude").isNotNull() & F.col("longitude").isNotNull(), 1
-        )
-        .otherwise(0)
-        .alias("has_coordinates"),
-    )
-    return flagged
+        "cast(last_updated as date) AS last_updated",
+        "current_timestamp() AS loaded_at",
+        "CASE WHEN contact_email IS NOT NULL THEN 1 ELSE 0 END AS has_email",
+        "CASE WHEN contact_phone IS NOT NULL THEN 1 ELSE 0 END AS has_phone",
+        "CASE WHEN street_address IS NOT NULL THEN 1 ELSE 0 END AS has_address",
+        "CASE WHEN cast(latitude as double) IS NOT NULL"
+        " AND cast(longitude as double) IS NOT NULL THEN 1 ELSE 0 END"
+        " AS has_coordinates",
+    ).where("service_id IS NOT NULL AND service_name IS NOT NULL")
 
 
 def anonymize(
@@ -186,78 +181,74 @@ def anonymize(
 def enrich(anon: DataFrame, conf: EngineSettings | None = None) -> DataFrame:
     """Business enrichment (int_services_enriched.sql:35-99)."""
     conf = conf or settings()
-    return anon.select(
+    p = int(conf.gps_precision)
+
+    def geo(c: str) -> str:
+        return f"cast(cast(cast({c} as double) as decimal(18,{p})) as string)"
+
+    category = _mapping_expr(
+        "organization_type_anon", ORGANIZATION_CATEGORY_MAP, "autres"
+    )
+    return anon.selectExpr(
         "*",
-        _mapping_expr(
-            "organization_type_anon", ORGANIZATION_CATEGORY_MAP, "autres"
-        ).alias("organization_category"),
-        F.substring(F.col("postal_code_anon"), 1, 2).alias("department_code_anon"),
-        masking.create_geohash(
-            "latitude_anon", "longitude_anon", conf.gps_precision
-        ).alias("geohash_anon"),
-        F.when(F.col("contact_email_anon").like("%@anonymized.gouv.fr"), 1)
-        .otherwise(0)
-        .alias("is_email_properly_anonymized"),
-        F.when(F.col("contact_phone_anon").like("%XX XX XX XX"), 1)
-        .otherwise(0)
-        .alias("is_phone_properly_anonymized"),
+        f"{category} AS organization_category",
+        "substring(postal_code_anon, 1, 2) AS department_code_anon",
+        f"concat('geo_', {geo('latitude_anon')}, '_', {geo('longitude_anon')})"
+        " AS geohash_anon",
+        "CASE WHEN contact_email_anon LIKE '%@anonymized.gouv.fr' THEN 1"
+        " ELSE 0 END AS is_email_properly_anonymized",
+        "CASE WHEN contact_phone_anon LIKE '%XX XX XX XX' THEN 1"
+        " ELSE 0 END AS is_phone_properly_anonymized",
     )
 
 
 def mart(enriched: DataFrame, conf: EngineSettings | None = None) -> DataFrame:
     """Open-data mart: rename *_anon -> clean, region mapping, quality filter
     (mart_services_open_data.sql:37-146)."""
-    conf = conf or settings()
     completeness = (
-        F.col("has_email_anon").cast("int")
-        + F.col("has_phone_anon").cast("int")
-        + F.col("has_address_anon").cast("int")
-        + F.col("has_coordinates_anon").cast("int")
+        "(cast(has_email_anon as int) + cast(has_phone_anon as int)"
+        " + cast(has_address_anon as int) + cast(has_coordinates_anon as int))"
     )
-    df = enriched.select(
-        F.col("service_id_anon").alias("service_id"),
-        F.col("service_name_anon").alias("service_name"),
-        F.col("parent_organization_anon").alias("parent_organization"),
-        F.col("organization_type_anon").alias("organization_type"),
-        _mapping_expr(
-            "organization_type_anon", ORGANIZATION_TYPE_LABELS, "Autre"
-        ).alias("organization_type_label"),
-        F.col("contact_email_anon").alias("contact_email"),
-        F.col("contact_phone_anon").alias("contact_phone"),
-        F.col("city_anon").alias("city"),
-        F.col("commune_anon").alias("commune"),
-        F.col("department_code_anon").alias("department_code"),
-        _mapping_expr(
-            "department_code_anon", REGION_MAP, "Autre région"
-        ).alias("region"),
-        F.col("latitude_anon").alias("latitude"),
-        F.col("longitude_anon").alias("longitude"),
-        F.col("geohash_anon").alias("geohash"),
-        F.col("insee_code_anon").alias("insee_code"),
-        F.col("postal_code_anon").alias("postal_code"),
-        F.col("has_email_anon").alias("has_email"),
-        F.col("has_phone_anon").alias("has_phone"),
-        F.col("has_address_anon").alias("has_address"),
-        F.col("has_coordinates_anon").alias("has_coordinates"),
-        completeness.alias("data_completeness_score"),
-        F.when(completeness >= 3, "Complet")
-        .when(completeness == 2, "Partiel")
-        .otherwise("Minimal")
-        .alias("data_quality_level"),
-        F.col("last_updated_anon").alias("last_updated"),
-        F.col("anonymized_at"),
-        F.current_timestamp().alias("mart_created_at"),
-        F.col("anonymization_version"),
-        F.concat(F.lit("GDPR Anonymizer v"), F.col("anonymization_version")).alias(
-            "processing_pipeline"
-        ),
-        F.lit("Conforme GDPR - Art. 4.5 (Pseudonymisation)").alias("legal_status"),
-        F.lit("Licence Ouverte / Open Licence").alias("license"),
+    type_label = _mapping_expr(
+        "organization_type_anon", ORGANIZATION_TYPE_LABELS, "Autre"
     )
-    return df.filter(
-        F.col("service_name").isNotNull()
-        & F.col("organization_type").isNotNull()
-        & (F.col("data_completeness_score") >= 1)
+    region = _mapping_expr("department_code_anon", REGION_MAP, "Autre région")
+    return enriched.selectExpr(
+        "service_id_anon AS service_id",
+        "service_name_anon AS service_name",
+        "parent_organization_anon AS parent_organization",
+        "organization_type_anon AS organization_type",
+        f"{type_label} AS organization_type_label",
+        "contact_email_anon AS contact_email",
+        "contact_phone_anon AS contact_phone",
+        "city_anon AS city",
+        "commune_anon AS commune",
+        "department_code_anon AS department_code",
+        f"{region} AS region",
+        "latitude_anon AS latitude",
+        "longitude_anon AS longitude",
+        "geohash_anon AS geohash",
+        "insee_code_anon AS insee_code",
+        "postal_code_anon AS postal_code",
+        "has_email_anon AS has_email",
+        "has_phone_anon AS has_phone",
+        "has_address_anon AS has_address",
+        "has_coordinates_anon AS has_coordinates",
+        f"{completeness} AS data_completeness_score",
+        f"CASE WHEN {completeness} >= 3 THEN 'Complet'"
+        f" WHEN {completeness} = 2 THEN 'Partiel'"
+        " ELSE 'Minimal' END AS data_quality_level",
+        "last_updated_anon AS last_updated",
+        "anonymized_at",
+        "current_timestamp() AS mart_created_at",
+        "anonymization_version",
+        "concat('GDPR Anonymizer v', anonymization_version)"
+        " AS processing_pipeline",
+        "'Conforme GDPR - Art. 4.5 (Pseudonymisation)' AS legal_status",
+        "'Licence Ouverte / Open Licence' AS license",
+    ).where(
+        "service_name IS NOT NULL AND organization_type IS NOT NULL"
+        " AND data_completeness_score >= 1"
     )
 
 
@@ -323,7 +314,10 @@ def run_pipeline(
             if parts:
                 w = w.partitionBy(*parts)
             w.parquet(path)
-            return spark.read.parquet(path)
+            # The written schema is known: pinning it skips the footer-
+            # inference job and keeps partition columns at their written
+            # type (inference would read department_code '01' back as 1).
+            return spark.read.schema(df.schema).parquet(path)
         return df
 
     # D4 run hooks: each layer's jobs carry a description in the Spark UI /

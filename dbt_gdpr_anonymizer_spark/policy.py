@@ -124,10 +124,20 @@ def validate_policy(policy: TablePolicy) -> None:
 
 
 def _sql_str(s: str) -> str:
-    """Quote a Python string as a Spark SQL literal (backslash escapes are
-    live in Spark SQL string literals, so backslashes double before
-    quotes do — same discipline as plans/pipeline._mapping_expr)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """Render a Python string as a Spark SQL expression that evaluates to
+    exactly ``s`` under either ``spark.sql.parser.escapedStringLiterals``
+    setting.
+
+    That setting decides whether backslash escapes in a quoted literal
+    are live, so no escaped form of ``\\`` or ``'`` reads the same under
+    both (a doubled-backslash regex matches nothing once escapes are off).
+    A string holding either character is therefore spelled as its UTF-8
+    bytes in hex, ``decode(unhex('<hex>'), 'UTF-8')``, which the
+    optimizer folds back to one literal. Any other string is a plain
+    quoted literal."""
+    if "\\" in s or "'" in s:
+        return f"decode(unhex('{s.encode('utf-8').hex()}'), 'UTF-8')"
+    return f"'{s}'"
 
 
 def _sql_ident(name: str) -> str:

@@ -196,26 +196,25 @@ def read_services_jsonl(spark: SparkSession, path: str) -> DataFrame:
 def flatten_services(raw: DataFrame) -> DataFrame:
     """Nested → flat projection (S2), replacing parse_service
     (download_data.py:83-118): struct field access and ``element_at`` for
-    ``website[0]`` — all codegen'd, no Python per row."""
-    return raw.filter(F.col("_corrupt_record").isNull()).select(
-        F.coalesce(F.col("id"), F.lit("")).alias("service_id"),
-        F.coalesce(F.col("name"), F.lit("")).alias("service_name"),
-        F.col("parent_name").alias("parent_organization"),
-        F.col("type").alias("organization_type"),
-        F.col("contact_email"),
-        F.col("contact_phone"),
-        F.when(
-            F.col("website").isNotNull() & (F.size("website") > 0),
-            F.element_at("website", 1),
-        ).alias("website"),
-        F.col("writeAddress.streetAddress").alias("street_address"),
-        F.col("writeAddress.postalCode").alias("postal_code"),
-        F.col("writeAddress.addressLocality").alias("city"),
-        F.col("geo.commune").alias("commune"),
-        F.col("geo.latitude").alias("latitude"),
-        F.col("geo.longitude").alias("longitude"),
-        F.col("geo.insee_comm").alias("insee_code"),
-        F.col("update").alias("last_updated"),
+    ``website[0]`` — all codegen'd, no Python per row. One parsed
+    projection: chained ``F.*`` calls would cost a py4j round trip each."""
+    return raw.where("_corrupt_record IS NULL").selectExpr(
+        "coalesce(id, '') AS service_id",
+        "coalesce(name, '') AS service_name",
+        "parent_name AS parent_organization",
+        "type AS organization_type",
+        "contact_email",
+        "contact_phone",
+        "CASE WHEN website IS NOT NULL AND size(website) > 0"
+        " THEN element_at(website, 1) END AS website",
+        "writeAddress.streetAddress AS street_address",
+        "writeAddress.postalCode AS postal_code",
+        "writeAddress.addressLocality AS city",
+        "geo.commune AS commune",
+        "geo.latitude AS latitude",
+        "geo.longitude AS longitude",
+        "geo.insee_comm AS insee_code",
+        "`update` AS last_updated",
     )
 
 

@@ -209,7 +209,8 @@ def test_generic_schema_tests_vocabulary(spark):
 def test_mapping_expr_escaping(spark):
     """Mapping keys/values with backslashes and quotes, and column
     names with backticks, must route exactly (the parsed-SQL rewrite
-    must match the old F.lit chain's raw-byte comparison)."""
+    must match the old F.lit chain's raw-byte comparison) under either
+    ``escapedStringLiterals`` parser setting."""
     from pyspark.sql import functions as F
 
     from dbt_gdpr_anonymizer_spark.plans.pipeline import _mapping_expr
@@ -218,16 +219,23 @@ def test_mapping_expr_escaping(spark):
         [("C:\\temp",), ("don't",), ("plain",), (None,)], ["od`d"]
     )
     m = {"C:\\temp": "bs\\v", "don't": "quo'te", "plain": "ok"}
-    got = {
-        r[0]: r.v
-        for r in df.select(
-            F.expr("`od``d`").alias("k"),
-            _mapping_expr("od`d", m, "MISS").alias("v"),
-        ).collect()
-    }
-    assert got == {
-        "C:\\temp": "bs\\v",
-        "don't": "quo'te",
-        "plain": "ok",
-        None: "MISS",
-    }
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            got = {
+                r[0]: r.v
+                for r in df.select(
+                    F.expr("`od``d`").alias("k"),
+                    F.expr(_mapping_expr("od`d", m, "MISS")).alias("v"),
+                ).collect()
+            }
+            assert got == {
+                "C:\\temp": "bs\\v",
+                "don't": "quo'te",
+                "plain": "ok",
+                None: "MISS",
+            }, mode
+    finally:
+        spark.conf.set(key, before)

@@ -116,3 +116,48 @@ models:
     assert out["contact_email_anon"].endswith("@anonymized.gouv.fr")
     assert out["latitude_anon"] == 48.86
     assert out["city_anon"] == "Paris"
+
+
+def test_sql_literals_read_the_same_under_both_parser_modes(spark):
+    """A salt with a quote and a backslash, and the three PII regexes,
+    are templated into SQL text; they must give the same hash and the
+    same scan hits whether or not ``escapedStringLiterals`` is on (a
+    doubled-backslash regex matches nothing once escapes are off)."""
+    import hashlib
+
+    from dbt_gdpr_anonymizer_spark.operators.validate import scan_for_pii
+
+    salt = "a'b\\c"
+    conf = EngineSettings(salt_key=salt)
+    df = spark.createDataFrame(
+        [("x@y.fr", "+33 1 23 45 67 89", "12 rue de la Paix")],
+        "contact_email string, contact_phone string, street_address string",
+    )
+    policy = TablePolicy(
+        name="t",
+        columns={
+            "contact_email": ColumnPolicy(pii=True, anonymization_method="hash_sha256")
+        },
+    )
+    want_email = (
+        "user_"
+        + hashlib.sha256(("x@y.fr" + salt).encode()).hexdigest()[:16]
+        + "@anonymized.gouv.fr"
+    )
+    want_scan = [
+        ("contact_email", "non_anonymized_email"),
+        ("contact_phone", "unmasked_fr_phone"),
+        ("street_address", "street_address"),
+    ]
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            email = mask_model(df, policy, conf).first()["contact_email_anon"]
+            scan = sorted(
+                (r.column_name, r.issue_type) for r in scan_for_pii(df).collect()
+            )
+            assert (email, scan) == (want_email, want_scan), mode
+    finally:
+        spark.conf.set(key, before)
